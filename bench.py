@@ -25,7 +25,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from football_etl_spark.plans.queries import REGISTRY, STAGED  # noqa: E402
+from football_etl_spark.plans.queries import REGISTRY  # noqa: E402
 from football_etl_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -73,8 +73,7 @@ HEADLINE = [
 
 
 def run_query(spark, name: str, sf_dir: str | None = None) -> float:
-    # staged (next-round) entries are timeable too — tools/scale_curve
-    fn = (REGISTRY.get(name) or STAGED[name]).fn
+    fn = REGISTRY[name].fn
     t0 = time.perf_counter()
     fn(spark, sf_dir or SF_DIR).write.mode("overwrite").format("noop").save()
     return time.perf_counter() - t0

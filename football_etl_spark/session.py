@@ -25,7 +25,39 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
-_SHIPPED: set[str] = set()
+_memo_app: str | None = None
+_memo: dict = {}
+
+
+def session_cache(spark: SparkSession) -> dict:
+    """The driver-side memo bound to the live SparkContext.
+
+    One dict holds everything the engine computes once per session:
+    the registry's prepared plans and loaded tables, the control-plane
+    values plan construction collects (eval shingle hashes, k-means
+    centroids, the 8 ANN query rows, PQ codebooks, BPE rules, n-gram
+    count checkpoints, ...), content-keyed broadcasts and the
+    ``ship_package`` marker. Plans stay lazy — apart from the n-gram
+    count checkpoints no data is cached, only analyzed DataFrames and
+    driver-sized values — so a repeat call re-pays optimization, planning and execution but not
+    py4j construction, Catalyst analysis or control-plane jobs (the
+    prepared-plan part alone measured 3.65 s of a 12.6 s steady-state
+    sf0.1 headline total).
+
+    Contract: a value is computed once per (session, sf) and reused
+    for the life of the session. A value derived from session config
+    is snapshotted at first use — the graph panel's partition floor
+    reads ``spark.sql.shuffle.partitions`` once, so a later in-session
+    change to it is ignored. ``applicationId`` is unique per
+    SparkContext, so when it changes the whole dict is replaced with
+    a fresh one — the only eviction path — and a stopped-and-recreated
+    session can never be handed its predecessor's plans or
+    broadcasts."""
+    global _memo_app, _memo
+    app = spark.sparkContext.applicationId
+    if app != _memo_app:
+        _memo_app, _memo = app, {}
+    return _memo
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -39,16 +71,17 @@ def ship_package(spark: SparkSession) -> None:
     correctness driver invokes the contract module), workers cannot.
     Zipping the package once per process and ``addPyFile``-ing it puts
     the archive on every worker's ``sys.path`` before task
-    deserialization. Cached per applicationId; repeat calls are
-    no-ops. On a real cluster the same archive rides
+    deserialization. Marked in :func:`session_cache`; repeat calls
+    for the same session are no-ops. On a real cluster the same archive rides
     ``--py-files``/``spark.submit.pyFiles`` and this helper is a
     harmless re-add."""
     import tempfile
     import zipfile
 
-    app = spark.sparkContext.applicationId
-    if app in _SHIPPED:
+    memo = session_cache(spark)
+    if memo.get("ship_package"):
         return
+    app = spark.sparkContext.applicationId
     pkg_root = os.path.dirname(os.path.abspath(__file__))
     parent = os.path.dirname(pkg_root)
     zp = os.path.join(tempfile.gettempdir(), f"fes_pkg_{os.getpid()}.zip")
@@ -64,7 +97,7 @@ def ship_package(spark: SparkSession) -> None:
                     z.write(full, os.path.relpath(full, parent))
     os.replace(tmp, zp)
     spark.sparkContext.addPyFile(zp)
-    _SHIPPED.add(app)
+    memo["ship_package"] = True
 
 
 def get_spark(

@@ -172,12 +172,12 @@ def test_ship_package_zips_sources_and_is_idempotent(spark):
     with the package name (so the archive lands importable on worker
     sys.path), (2) include the Python DataSource module that pickles
     by reference, and (3) be a cheap no-op on repeat calls for the
-    same session (cached per applicationId)."""
+    same session (marked in the session memo)."""
     import os
     import tempfile
     import zipfile
 
-    from football_etl_spark.session import _SHIPPED, ship_package
+    from football_etl_spark.session import session_cache, ship_package
 
     ship_package(spark)
     zp = os.path.join(tempfile.gettempdir(), f"fes_pkg_{os.getpid()}.zip")
@@ -187,8 +187,7 @@ def test_ship_package_zips_sources_and_is_idempotent(spark):
     assert all(n.startswith("football_etl_spark/") for n in names)
     assert "football_etl_spark/io/dump_source.py" in names
     assert "football_etl_spark/session.py" in names
-    app = spark.sparkContext.applicationId
-    assert app in _SHIPPED
+    assert session_cache(spark).get("ship_package")
     mtime = os.path.getmtime(zp)
     ship_package(spark)  # cached — must not rebuild the archive
     assert os.path.getmtime(zp) == mtime

@@ -505,6 +505,42 @@ def test_contamination_report_counts_and_clean_docs(spark):
     assert out[3] == (1, 1, True)
 
 
+def test_contamination_eval_hashes_match_join_and_track_mutation(spark):
+    """The map-only ``eval_hashes`` probe must agree with the join
+    path for a list and for a one-shot generator, and must see the
+    list's CURRENT content: a broadcast cached by list identity kept
+    serving the pre-mutation suite after ``clear()``."""
+    from football_etl_spark.io.loader import load_table
+    from football_etl_spark.operators import dedup as dd
+    from tests.conftest import SF_SMOKE
+
+    d = load_table(spark, SF_SMOKE, "documents")
+    ev = d.filter(F.col("doc_id") % 47 == 0)
+    tr = d.filter(F.col("doc_id") % 47 != 0)
+    hs = [
+        r[0]
+        for r in ev.select(
+            F.explode(F.array_distinct(text.shingles("text", 5))).alias("s")
+        )
+        .select(F.xxhash64("s"))
+        .distinct()
+        .collect()
+    ]
+
+    def hits(df):
+        return {r["doc_id"]: r["n_hits"] for r in df.collect()}
+
+    joined = hits(dd.contamination_report(tr, ev, shingle_n=5))
+    assert sum(joined.values()) > 0, "sf0.001 eval slice shares no shingles"
+    for probe in (hs, (h for h in hs)):
+        got = hits(dd.contamination_report(tr, ev, shingle_n=5, eval_hashes=probe))
+        assert {k: got[k] for k in joined} == joined
+        assert all(got[k] == 0 for k in got.keys() - joined.keys())
+    hs.clear()
+    after = hits(dd.contamination_report(tr, ev, shingle_n=5, eval_hashes=hs))
+    assert sum(after.values()) == 0
+
+
 def test_hll_sketch_rollup_bounds_and_mergeability(spark):
     from football_etl_spark.operators import sketches
     from pyspark.sql import functions as F
@@ -630,7 +666,7 @@ def test_kmeans_fit_decreases_inertia_and_is_deterministic(spark):
     from tests.conftest import SF_ORACLE
 
     e = _t(spark, SF_ORACLE, "embeddings")
-    init = _q8_rows(spark, SF_ORACLE, e)
+    init = _q8_rows(spark, SF_ORACLE)
 
     def inertia(cent):
         rows = similarity.kmeans_assign(e, cent).collect()
@@ -657,7 +693,7 @@ def test_semantic_dedup_marks_known_pairs(spark):
     from tests.conftest import SF_ORACLE
 
     e = _t(spark, SF_ORACLE, "embeddings")
-    out = similarity.semantic_dedup(e, _q8_rows(spark, SF_ORACLE, e), threshold=0.35)
+    out = similarity.semantic_dedup(e, _q8_rows(spark, SF_ORACLE), threshold=0.35)
     rows = out.collect()
     assert len(rows) == e.count()
     dropped = [r for r in rows if not r["kept"]]

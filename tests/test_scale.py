@@ -191,13 +191,13 @@ STAGED_PARTITION_SENSITIVE = [
 
 def test_staged_results_invariant_to_shuffle_partition_count(spark):
     """The registry's partition-count invariance bar applied to the
-    staged tier before promotion."""
-    from football_etl_spark.plans.queries import REGISTRY, STAGED
+    entries promoted through the former staged tier."""
+    from football_etl_spark.plans.queries import REGISTRY
 
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         for name in STAGED_PARTITION_SENSITIVE:
-            df = (REGISTRY.get(name) or STAGED[name]).fn(spark, SF_SMOKE)
+            df = REGISTRY[name].fn(spark, SF_SMOKE)
             spark.conf.set("spark.sql.shuffle.partitions", "3")
             r_low = sorted(map(repr, (tuple(r) for r in df.collect())))
             spark.conf.set("spark.sql.shuffle.partitions", "17")
