@@ -72,6 +72,28 @@ HEADLINE = [
 ]
 
 
+# Local small-file tuning: the sf0.1 tables are single ~1-10 MB
+# parquet files, which the default 128 MB maxPartitionBytes scans
+# as ONE task each. 2 MB splits give the 32 local cores work. (On
+# a real cluster against TB-scale inputs the default is correct —
+# this override is bench-local, not an engine default.)
+# Bench-local shuffle tuning, same spirit: at sf0.1 a shuffle moves
+# single-digit MB, so 8 post-shuffle partitions keep every stage's
+# task count proportionate, and AQE's per-stage re-plan latency
+# (~50-100 ms × 2-4 stages × 75 query executions) costs more than
+# its runtime re-optimizations can recover on sub-second queries.
+# On a real cluster BOTH knobs flip the other way (AQE on,
+# partitions sized to data / auto-coalesced by AQE) — that is the
+# engine default in session.get_spark; these overrides are
+# bench-scale-local, like maxPartitionBytes above.
+BENCH_CONF = {
+    "spark.sql.files.maxPartitionBytes": "2m",
+    "spark.sql.files.openCostInBytes": "262144",
+    "spark.sql.shuffle.partitions": "8",
+    "spark.sql.adaptive.enabled": "false",
+}
+
+
 def run_query(spark, name: str, sf_dir: str | None = None) -> float:
     fn = REGISTRY[name].fn
     t0 = time.perf_counter()
@@ -80,28 +102,9 @@ def run_query(spark, name: str, sf_dir: str | None = None) -> float:
 
 
 def main() -> None:
-    # Local small-file tuning: the sf0.1 tables are single ~1-10 MB
-    # parquet files, which the default 128 MB maxPartitionBytes scans
-    # as ONE task each. 2 MB splits give the 32 local cores work. (On
-    # a real cluster against TB-scale inputs the default is correct —
-    # this override is bench-local, not an engine default.)
-    # Bench-local shuffle tuning, same spirit: at sf0.1 a shuffle moves
-    # single-digit MB, so 8 post-shuffle partitions keep every stage's
-    # task count proportionate, and AQE's per-stage re-plan latency
-    # (~50-100 ms × 2-4 stages × 75 query executions) costs more than
-    # its runtime re-optimizations can recover on sub-second queries.
-    # On a real cluster BOTH knobs flip the other way (AQE on,
-    # partitions sized to data / auto-coalesced by AQE) — that is the
-    # engine default in session.get_spark; these overrides are
-    # bench-scale-local, like maxPartitionBytes above.
     spark = get_spark(
         app_name="football-etl-spark-bench",
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": "2m",
-            "spark.sql.files.openCostInBytes": "262144",
-            "spark.sql.shuffle.partitions": "8",
-            "spark.sql.adaptive.enabled": "false",
-        },
+        extra_conf=BENCH_CONF,
     )
     # warmup: JVM + codegen + parquet footer caches
     run_query(spark, "top_event_types")

@@ -710,7 +710,7 @@ def simhash_signatures(
     # sums, but aggregate codegen's subexpression elimination already
     # evaluates it once, so the extra Project only cost — the r12
     # driver measured the materialized form 0.79x, and the r13
-    # same-session interleaved A/B (tools/ab_r13.py, min-of-5)
+    # same-session interleaved A/B (min-of-5, OPTIMIZATION_r13.md)
     # confirmed the revert faster at every depth: 0.927x at sf0.1,
     # 0.909x at x10, 0.950x at x100 (VERDICT r12 ask #1).
     h = F.conv(F.substring(F.md5("__tok"), 1, bits // 4), 16, 10).cast("long")

@@ -18,7 +18,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import HEADLINE, SF_DIR  # noqa: E402
+from bench import BENCH_CONF, HEADLINE, SF_DIR  # noqa: E402
 from football_etl_spark.plans.queries import REGISTRY  # noqa: E402
 from football_etl_spark.session import get_spark  # noqa: E402
 
@@ -33,12 +33,7 @@ def main() -> None:
     os.makedirs(OUT_DIR, exist_ok=True)
     spark = get_spark(
         app_name="explain-dump",
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": "2m",
-            "spark.sql.files.openCostInBytes": "262144",
-            "spark.sql.shuffle.partitions": "8",
-            "spark.sql.adaptive.enabled": "false",
-        },
+        extra_conf=BENCH_CONF,
     )
     for name in names:
         fn = REGISTRY[name].fn

@@ -13,19 +13,14 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import SF_DIR, run_query  # noqa: E402
+from bench import BENCH_CONF, SF_DIR, run_query  # noqa: E402
 from football_etl_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
     spark = get_spark(
         app_name="timeq",
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": "2m",
-            "spark.sql.files.openCostInBytes": "262144",
-            "spark.sql.shuffle.partitions": "8",
-            "spark.sql.adaptive.enabled": "false",
-        },
+        extra_conf=BENCH_CONF,
     )
     run_query(spark, "top_event_types")  # warmup
     for name in sys.argv[1:]:
